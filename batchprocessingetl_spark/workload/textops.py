@@ -3646,21 +3646,54 @@ EXTRA_ORACLE["q274_kneser_ney"] = _ORACLE_ALL["q274_kneser_ney"]
 SETCOVER_K = 6
 
 
-def _covered_lazy_ok(docs: DataFrame) -> bool:
-    """True when the set-cover covered-shingle frame should stay a
-    LAZY union (no per-round barrier): each round then rebuilds its
-    anti-join broadcast from <= k-1 doc-filtered scans of the shingle
-    frame/store — measurably cheaper than k eager checkpoint jobs at
-    bench scale, but O(k^2) corpus-frame scans at cluster scale, where
-    the barrier's O(k) wins. Gated on the docs input-size estimate
-    (driver-side, no job; default 1 GiB, env-overridable; unknown
-    estimate => barrier, the scale-safe branch)."""
-    import os
+def _greedy_cover(spark: SparkSession, frame: DataFrame, pool=None) -> DataFrame:
+    """Greedy maximum-coverage rounds over ``frame``: one materialized
+    row per document, ``(doc_id, sh)`` with ``sh`` its distinct shingle
+    array. Round r considers the docs matching ``pool(r)`` (every doc
+    when ``pool`` is None).
 
-    from batchprocessingetl_spark.operators.iteration import input_size_estimate
+    Each round is ONE map-only job: per doc, the still-uncovered
+    shingles ``new = array_except(sh, covered)`` and their count, then a
+    TakeOrdered top-1 on (gain desc, doc_id) — no shuffle, no
+    broadcast. The winner's ``new`` array comes back in that same row
+    and extends the driver-held covered list, which is at most k docs'
+    worth of shingles.
 
-    gate = int(os.environ.get("SPARK_GRAFT_COVERED_BARRIER_MIN_BYTES", str(1 << 30)))
-    return input_size_estimate(docs) <= gate
+    ``covered`` enters the plan as ONE string literal split on "\\n",
+    which Catalyst constant-folds to an array literal. "\\n" cannot
+    occur in a shingle (tokens split on \\s+ and are joined with one
+    space). Never pass one py4j literal per shingle (``isin(*list)``,
+    ``F.lit(list)``): at about 500 shingles that costs about 0.13 s of
+    plan building per round.
+
+    A round whose pool holds no doc with gain > 0 picks nothing; with
+    no pool the corpus is then fully covered and the loop ends. Gains
+    are exact integers and ties break on doc_id, so the DuckDB oracle
+    picks identical documents every round."""
+    picked: list[tuple[int, int, int, int]] = []
+    covered: list[str] = []
+    total = 0
+    for r in range(1, SETCOVER_K + 1):
+        new = F.array_except("sh", F.split(F.lit("\n".join(covered)), "\n"))
+        cand = frame if pool is None else frame.filter(pool(r))
+        best = (
+            cand.select("doc_id", F.size(new).alias("gain"), new.alias("new"))
+            .filter(F.col("gain") > 0)
+            .orderBy(F.desc("gain"), "doc_id")
+            .limit(1)
+            .collect()
+        )
+        if not best:
+            if pool is None:
+                break
+            continue
+        b = best[0]
+        total += b.gain
+        picked.append((r, b.doc_id, b.gain, total))
+        covered.extend(b.new)
+    return spark.createDataFrame(
+        picked, "round int, doc_id long, gain long, covered long"
+    ).orderBy("round")
 
 
 def q275_setcover_selection(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3669,96 +3702,32 @@ def q275_setcover_selection(spark: SparkSession, sf_dir: str) -> DataFrame:
     classic (1−1/e)-approximate set-cover greedy that data-curation
     pipelines run to assemble a small eval/seed set with maximal
     n-gram coverage (the coverage-driven dual of q253's k-center
-    diversity selection). Each round is one distributed count
-    aggregate over the cached (doc, shingle) frame and ONE 1-row
-    collect (the argmax — the k-center/BPE bounded-collect
-    discipline). The covered-shingle state is SMALL by construction
-    (at most k docs x shingles-per-doc rows), so each round removes
-    it with a BROADCAST anti-join against the one materialized base
-    frame — no per-round rewrite/checkpoint of the data-proportional
-    survivor frame (round 8 materialized the shrinking frame k times;
-    this design's only data-proportional pass per round is the gain
-    aggregate itself — VERDICT r8 #6). Shingle sets never pass
-    through the driver: the covered set stays a DataFrame, updated by
-    one doc-filtered pass per round.
-    Ties break on doc_id; counts are exact integers, so both engines
-    pick identical documents every round. Exact greedy max-coverage
-    is inherently k linear passes over the uncovered frame (the 10×
-    probe's α IS that k-pass linearity, not a plan defect); the
-    100 TB cheapening is q281's stochastic greedy, which prices each
-    round at a 1/m sample of the candidate docs.
+    diversity selection).
 
-    r14 note (guide §1.1, measure first): a driver-side-set rewrite of
-    the covered state (collect + createDataFrame per round) was
-    measured SLOWER (+0.35s/round: a parallelize-backed broadcast
-    build costs far more than one built on the localCheckpointed
-    frame), so the checkpoint design stays. The one measured win kept:
-    the final round's covered-set update is dead work (nothing reads
-    it) and is skipped."""
+    The per-doc distinct shingle arrays are materialized once
+    (executor-local checkpoint); each round is then one map-only
+    TakeOrdered job over them (:func:`_greedy_cover`). The covered set
+    is held on the driver: it is small by construction (at most k docs
+    of shingles) and enters each round's plan as one folded literal,
+    so a round costs one linear pass with no shuffle, no broadcast
+    build and no per-round checkpoint of covered state. An earlier
+    driver-held set lost because it shipped the covered shingles as
+    one py4j literal each (and a parallelize-backed broadcast per
+    round); one string literal per round removes that cost.
+    Exact greedy max-coverage is inherently k linear passes over the
+    corpus; the 100 TB cheapening is q281's stochastic greedy, which
+    prices each round at a 1/m sample of the candidate docs."""
     from batchprocessingetl_spark.operators.dedup import shingle_frame
     from batchprocessingetl_spark.operators.iteration import barrier
 
     docs = load_table(spark, sf_dir, "documents")
-    # (doc_id, sh) is distinct by construction — shingles dedupe WITHIN
-    # each doc's array before the explode, so the materialization is
-    # map-only (no global distinct shuffle)
-    # inner-explode discipline: see operators/dedup.shingles_of_tokens
+    # shingle arrays are distinct within each doc by construction
     sh = barrier(
-        shingle_frame(docs, "doc_id", "text", 3)
-        .select(
-            F.col("id").alias("doc_id"),
-            F.explode(F.array_distinct("sh")).alias("sh"),
+        shingle_frame(docs, "doc_id", "text", 3).select(
+            F.col("id").alias("doc_id"), "sh"
         )
     )
-    picked: list[tuple[int, int, int, int]] = []
-    picked_ids: list[int] = []
-    covered_sh = None  # small: <= k docs' worth of shingles
-    covered = 0
-    # Size-gated covered-set barrier (r15, guide §1.1 + the q37 gate
-    # pattern): below the gate the covered frame stays a LAZY union —
-    # each round's broadcast build re-runs <= k-1 doc-filtered scans of
-    # the materialized shingle frame, which is cheap in memory and
-    # skips the per-round eager checkpoint job (interleaved A/B at
-    # sf0.1: q275 2.21/2.31 s lazy vs 2.59/3.16 s barriered). Above
-    # the gate the barrier returns: the lazy form costs O(k^2)
-    # corpus-frame scans across the loop where the barriered form
-    # costs O(k) — the bench win inverts at scale. Rows are identical
-    # either way (same union, materialized or not).
-    lazy_covered = _covered_lazy_ok(docs)
-    for r in range(1, SETCOVER_K + 1):
-        cand = sh
-        if picked_ids:
-            # the anti-join alone eliminates picked docs: every shingle
-            # of a picked doc is covered by construction, so all its
-            # rows drop and it can never win again. Omitting the old
-            # redundant ~isin(picked_ids) filter keeps round plans
-            # structurally identical, so whole-stage codegen compiles
-            # once and is cache-hit by rounds 3+ (r14, guide §1.2).
-            cand = sh.join(F.broadcast(covered_sh), "sh", "left_anti")
-        best = (
-            cand.groupBy("doc_id")
-            .agg(F.count(F.lit(1)).alias("gain"))
-            .orderBy(F.desc("gain"), "doc_id")
-            .limit(1)
-            .collect()
-        )
-        if not best:
-            break
-        b = best[0]
-        covered += b.gain
-        picked.append((r, int(b.doc_id), int(b.gain), covered))
-        picked_ids.append(int(b.doc_id))
-        if r == SETCOVER_K:
-            break  # the last pick's covered-set update is never read
-        new_sh = sh.filter(F.col("doc_id") == b.doc_id).select("sh")
-        # union WITHOUT distinct (r15): the left-anti join is
-        # insensitive to duplicate keys on its build side, so the old
-        # per-round distinct was a pure-overhead shuffle
-        u = new_sh if covered_sh is None else covered_sh.union(new_sh)
-        covered_sh = u if lazy_covered else barrier(u)
-    return spark.createDataFrame(
-        picked, "round int, doc_id long, gain long, covered long"
-    ).orderBy("round")
+    return _greedy_cover(spark, sh)
 
 
 def _q275_oracle() -> str:
@@ -3835,8 +3804,8 @@ def q281_stochastic_setcover(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Stochastic-greedy maximum-coverage selection — q275's 100 TB
     path (VERDICT r8 #3, re-architected per VERDICT r9 #1). Lazier-
     than-lazy greedy (Mirzasoleiman et al., AAAI'15) with the sample
-    made PRUNABLE: the (doc, shingle) frame is materialized ONCE as a
-    parquet side-table physically partitioned by a static bucket
+    made PRUNABLE: the per-doc shingle arrays are materialized ONCE as
+    a parquet side-table physically partitioned by a static bucket
     column md5('sgb:'||doc_id) % SETCOVER_SG_MOD, and round r's
     candidate pool is bucket (r-1) % MOD — a partition-pruned scan
     that reads 1/MOD of the data (PartitionFilters at the FileScan;
@@ -3849,79 +3818,38 @@ def q281_stochastic_setcover(spark: SparkSession, sf_dir: str) -> DataFrame:
     the DuckDB oracle (same md5, same mod, same round->bucket map),
     so the stochastic run is still exactly verified: rounds whose
     bucket is exhausted pick nothing and are skipped on BOTH engines.
-    The covered-set plumbing is q275's: a small (<= k docs) broadcast
-    anti-join, no per-round rewrite of the base frame; the picked
-    doc's shingles are likewise read back from its bucket partition
-    only."""
-    import os
+    The rounds are q275's (:func:`_greedy_cover`): one map-only job
+    each, with the covered set held on the driver as one folded
+    literal. The store is read back with the schema it was written
+    with (no inference job) and deleted once the rounds end, on
+    failure too: the result is built from the driver-side picks."""
     import shutil
 
     from batchprocessingetl_spark.operators.dedup import shingle_frame
-    from batchprocessingetl_spark.operators.iteration import barrier
 
     docs = load_table(spark, sf_dir, "documents")
     work = work_dir(spark, "sgcover")
     shutil.rmtree(work, ignore_errors=True)
-    # map-only materialization: shingles are deduped WITHIN each doc's
-    # array (array_distinct before the explode) — (doc_id, sh) is then
-    # distinct by construction, so no global distinct shuffle; the
-    # partitionBy write runs at full parallelism (each task fans its
-    # rows into the MOD bucket dirs — never repartition down to MOD
-    # tasks, which serializes the write)
-    (
-        shingle_frame(docs, "doc_id", "text", 3)
-        # inner-explode discipline: see operators/dedup.shingles_of_tokens
-        .select(
-            F.col("id").alias("doc_id"),
-            F.explode(F.array_distinct("sh")).alias("sh"),
-        )
-        .withColumn("bucket", _sg_bucket(F.col("doc_id")))
-        # snappy, not the session zstd: this store is re-read every
-        # round within the timed query and deleted after; read-path
-        # decode speed wins (VERDICT r14 #4, guide §6)
-        .write.option("compression", work_codec())
-        .partitionBy("bucket")
-        .parquet(work)
+    per_doc = shingle_frame(docs, "doc_id", "text", 3).select(
+        F.col("id").alias("doc_id"), "sh", _sg_bucket(F.col("id")).alias("bucket")
     )
-    store = spark.read.parquet(work)
-    picked: list[tuple[int, int, int, int]] = []
-    picked_ids: list[int] = []
-    covered_sh = None
-    covered = 0
-    lazy_covered = _covered_lazy_ok(docs)  # see q275 / _covered_lazy_ok
-    for r in range(1, SETCOVER_K + 1):
-        bkt = (r - 1) % SETCOVER_SG_MOD
-        cand = store.filter(F.col("bucket") == bkt)
-        if picked_ids:
-            # anti-join alone suffices — a picked doc's rows are all
-            # covered (see q275); identical round-plan structure keeps
-            # the codegen cache warm across rounds
-            cand = cand.join(F.broadcast(covered_sh), "sh", "left_anti")
-        best = (
-            cand.groupBy("doc_id")
-            .agg(F.count(F.lit(1)).alias("gain"))
-            .orderBy(F.desc("gain"), "doc_id")
-            .limit(1)
-            .collect()
+    try:
+        # the partitionBy write runs at full parallelism (each task fans
+        # its rows into the MOD bucket dirs — never repartition down to
+        # MOD tasks, which serializes the write); snappy, not the
+        # session zstd: this store is re-read every round and then
+        # deleted, so read-path decode speed wins (VERDICT r14 #4)
+        (
+            per_doc.write.option("compression", work_codec())
+            .partitionBy("bucket")
+            .parquet(work)
         )
-        if not best:
-            continue  # bucket exhausted this round; next round rotates
-        b = best[0]
-        covered += b.gain
-        picked.append((r, int(b.doc_id), int(b.gain), covered))
-        picked_ids.append(int(b.doc_id))
-        if r == SETCOVER_K:
-            break  # the last pick's covered-set update is never read
-        new_sh = store.filter(
-            (F.col("bucket") == bkt) & (F.col("doc_id") == b.doc_id)
-        ).select("sh")
-        # union without distinct + size-gated barrier — see q275 (here
-        # the lazy rebuild's scans are additionally bucket-pruned)
-        u = new_sh if covered_sh is None else covered_sh.union(new_sh)
-        covered_sh = u if lazy_covered else barrier(u)
-    return spark.createDataFrame(
-        picked, "round int, doc_id long, gain long, covered long"
-    ).orderBy("round")
+        store = spark.read.schema(per_doc.schema).parquet(work)
+        return _greedy_cover(
+            spark, store, lambda r: F.col("bucket") == (r - 1) % SETCOVER_SG_MOD
+        )
+    finally:
+        shutil.rmtree(work, ignore_errors=True)
 
 
 def _q281_oracle() -> str:

@@ -1798,15 +1798,24 @@ def _noise_planes(emb: DataFrame) -> list[list[float]]:
     audit must track EXACTLY the shipped candidate generator, so the
     construction lives in one place): plane rows are embeddings
     1.._noise_planes_b(n), collected as model parameters (q66's
-    documented materialization)."""
-    b = _noise_planes_b(emb.count())
-    rows = (
-        emb.filter((F.col("vec_id") >= 1) & (F.col("vec_id") <= b))
-        .orderBy("vec_id")
-        .select("embedding")
-        .collect()
-    )
-    return [[float(x) for x in r["embedding"]] for r in rows]
+    documented materialization). One aggregate returns both n and
+    the at most NOISE_MAX_PLANES candidate plane rows, so building
+    the planes costs one collect, not a count plus a sorted collect."""
+    row = emb.agg(
+        F.count(F.lit(1)).alias("n"),
+        F.collect_list(
+            F.when(
+                F.col("vec_id").between(1, NOISE_MAX_PLANES),
+                F.struct("vec_id", "embedding"),
+            )
+        ).alias("planes"),
+    ).collect()[0]
+    b = _noise_planes_b(row.n)
+    return [
+        [float(x) for x in p.embedding]
+        for p in sorted(row.planes, key=lambda p: p.vec_id)
+        if p.vec_id <= b
+    ]
 
 
 def knn_label_noise_exact(spark: SparkSession, sf_dir: str) -> DataFrame:

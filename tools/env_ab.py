@@ -58,15 +58,28 @@ def main() -> None:
     rounds = int(sys.argv[1])
     arm_a, arm_b = parse_spec(sys.argv[2]), parse_spec(sys.argv[3])
     docs: dict[str, list[dict]] = {"A": [], "B": []}
+    failed = None
     for i in range(rounds):
         for arm, ov in (("A", arm_a), ("B", arm_b)):
-            doc = run_once(ov)
+            try:
+                doc = run_once(ov)
+            except subprocess.CalledProcessError as exc:
+                print(exc.stderr, file=sys.stderr)
+                failed = f"arm {arm} run {i+1}: bench.py exited {exc.returncode}"
+                break
             docs[arm].append(doc)
             print(
                 f"# {arm} run {i+1}: total {doc['value']} cal {doc['calibration']}"
                 f" norm {doc['value_normalized']}",
                 file=sys.stderr,
             )
+        if failed:
+            # keep the completed rounds: report them, then exit non-zero
+            print(f"# stopped: {failed}", file=sys.stderr)
+            docs = {arm: ds[:i] for arm, ds in docs.items()}
+            break
+    if not docs["A"]:
+        sys.exit(f"no completed round ({failed})")
     queries = list(docs["A"][0]["queries"])
     med = {
         arm: {
@@ -85,7 +98,11 @@ def main() -> None:
             q: round(med["B"][q] / med["A"][q], 3) for q in queries if med["A"][q]
         },
     }
+    if failed:
+        out["failed"] = failed
     print(json.dumps(out))
+    if failed:
+        sys.exit(1)
 
 
 if __name__ == "__main__":
